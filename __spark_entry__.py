@@ -33,6 +33,7 @@ from biggraphite_spark.operators.find import find_metrics
 from biggraphite_spark.operators.gapfill import dense_series
 from biggraphite_spark.globs import compile_glob
 from biggraphite_spark.sources.testdata import load_parallel as _load_parallel
+from biggraphite_spark.sources.testdata import load_table as _load_table
 from biggraphite_spark.sources.events import (
     NOW,
     ORACLE_AGG,
@@ -817,7 +818,7 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing-summary scan+agg (beyond-reference analytics surface): single
     scan, map-side partial agg, 4-group output."""
     _utc(spark)
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    l = _load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         l.filter(F.col("l_shipdate") <= F.lit("2000-01-01"))
@@ -856,13 +857,13 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shipping-priority top-k: broadcast the filtered customer dim, shuffle
     only the order-level aggregation; deterministic (revenue, key) ordering."""
     _utc(spark)
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
+    c = _load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    o = _load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01")
     )
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    l = _load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-01-01")
     )
     return (
@@ -905,8 +906,7 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local-supplier-volume join pipeline: every dimension broadcast, the
     fact table streams through one shuffle for the final group-by."""
     _utc(spark)
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
-    c, o, l, s, n, r = (rd(t) for t in ("customer", "orders", "lineitem", "supplier", "nation", "region"))
+    c, o, l, s, n, r = (_load_table(spark, sf_dir, t) for t in ("customer", "orders", "lineitem", "supplier", "nation", "region"))
     return (
         l.join(
             o.filter(
@@ -1269,7 +1269,7 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forecasting-revenue filter+agg: fully pushed-down scan, one partial
     aggregate, single-row output."""
     _utc(spark)
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    l = _load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -1300,11 +1300,11 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     days after the order date).  The EXISTS becomes a left-semi join with
     a non-equi conjunct — the fact side never duplicates orders."""
     _utc(spark)
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    o = _load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01"))
         & (F.col("o_orderdate") < F.lit("1996-10-01"))
     )
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    l = _load_table(spark, sf_dir, "lineitem")
     late = (F.col("l_orderkey") == F.col("o_orderkey")) & (
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
     )
@@ -1331,8 +1331,8 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape over the synthetic schema (l_returnflag stands in for
     l_shipmode): one join, per-group CASE counts inside the partial agg."""
     _utc(spark)
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    o = _load_table(spark, sf_dir, "orders")
+    l = _load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1997-01-01"))
     )
@@ -1557,8 +1557,8 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-anti join against the customers ordering since 2000 — rich
     customers with no recent order, grouped for the sales report."""
     _utc(spark)
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    c = _load_table(spark, sf_dir, "customer")
+    o = _load_table(spark, sf_dir, "orders")
     avg_bal = (
         c.filter(F.col("c_acctbal") > 0).agg(F.avg("c_acctbal").alias("ab"))
     )
@@ -1607,14 +1607,14 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the symmetric nation-pair disjunction evaluated after both.  All
     four dimensions broadcast; lineitem is the only fact scanned."""
     _utc(spark)
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    l = _load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1998-01-01"))
     )
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    s = _load_table(spark, sf_dir, "supplier")
+    o = _load_table(spark, sf_dir, "orders")
+    c = _load_table(spark, sf_dir, "customer")
+    n = _load_table(spark, sf_dir, "nation")
     sn = n.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
@@ -1668,15 +1668,15 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter-windowed orders, revenue per customer, global top-20 — the
     groupBy feeds a single TakeOrderedAndProject, no full sort."""
     _utc(spark)
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    c = _load_table(spark, sf_dir, "customer")
+    o = _load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1996-04-01"))
     )
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    l = _load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
     )
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    n = _load_table(spark, sf_dir, "nation")
     return (
         l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("c_custkey") == F.col("o_custkey"))
@@ -1725,11 +1725,11 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Promotion effect (TPC-H Q14): one broadcast dim join, conditional
     numerator and unconditional denominator in the SAME aggregation pass."""
     _utc(spark)
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    l = _load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-09-01"))
         & (F.col("l_shipdate") < F.lit("1996-10-01"))
     )
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = _load_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         l.join(p, F.col("p_partkey") == F.col("l_partkey"))
@@ -1767,9 +1767,9 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING becomes an aggregated key set semi-joined back into the fact —
     the key set is tiny after the HAVING, so it broadcasts."""
     _utc(spark)
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    c = _load_table(spark, sf_dir, "customer")
+    o = _load_table(spark, sf_dir, "orders")
+    l = _load_table(spark, sf_dir, "lineitem")
     big = (
         l.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("s"))
@@ -1812,8 +1812,8 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     planner keeps the disjunction as a post-join filter while still pushing
     each side's common conjuncts into the scans."""
     _utc(spark)
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    l = _load_table(spark, sf_dir, "lineitem")
+    p = _load_table(spark, sf_dir, "part")
     j = l.join(p, F.col("p_partkey") == F.col("l_partkey"))
     g = lambda brand, smax, qlo, qhi: (  # noqa: E731
         (F.col("p_brand") == brand)
@@ -1872,8 +1872,7 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: aggregate -> min-per-group -> equality join back (the classic
     argmin join), dimensions broadcast."""
     _utc(spark)
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
-    l, s, n, r, p = (rd(t) for t in ("lineitem", "supplier", "nation", "region", "part"))
+    l, s, n, r, p = (_load_table(spark, sf_dir, t) for t in ("lineitem", "supplier", "nation", "region", "part"))
     cost = l.groupBy(
         F.col("l_partkey").alias("partkey"), F.col("l_suppkey").alias("suppkey")
     ).agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost"))
@@ -1940,9 +1939,8 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies, zero extra shuffles; share = conditional-sum / sum in one
     aggregation."""
     _utc(spark)
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
     l, p, s, o, c, n, r = (
-        rd(t) for t in ("lineitem", "part", "supplier", "orders", "customer", "nation", "region")
+        _load_table(spark, sf_dir, t) for t in ("lineitem", "part", "supplier", "orders", "customer", "nation", "region")
     )
     n1 = n.select(
         F.col("n_nationkey").alias("c_nkey"), F.col("n_regionkey").alias("c_rkey")
@@ -2016,8 +2014,7 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no partsupp table).  The LIKE filter prunes part BEFORE the broadcast,
     so the fact scan only keeps matching partkeys."""
     _utc(spark)
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
-    l, p, s, o, n = (rd(t) for t in ("lineitem", "part", "supplier", "orders", "nation"))
+    l, p, s, o, n = (_load_table(spark, sf_dir, t) for t in ("lineitem", "part", "supplier", "orders", "nation"))
     return (
         l.join(
             F.broadcast(p.filter(F.col("p_name").like("%gear%"))),
@@ -2069,8 +2066,7 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row broadcast (scalar-subquery shape, like q22) — no second scan
     of the fact table."""
     _utc(spark)
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
-    l, s, n = (rd(t) for t in ("lineitem", "supplier", "nation"))
+    l, s, n = (_load_table(spark, sf_dir, t) for t in ("lineitem", "supplier", "nation"))
     partval = (
         l.join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(
@@ -2118,8 +2114,8 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation histograms the counts.  The priority filter stands in for
     the reference's o_comment NOT LIKE (no comment column)."""
     _utc(spark)
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    c = _load_table(spark, sf_dir, "customer")
+    o = _load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     )
     return (
@@ -2151,8 +2147,8 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     row(s).  max-threshold is a single-row broadcast against the (tiny)
     aggregated frame — the revenue view is computed once."""
     _utc(spark)
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    l = _load_table(spark, sf_dir, "lineitem")
+    s = _load_table(spark, sf_dir, "supplier")
     revenue0 = (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -2193,14 +2189,14 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclusion stands in for the complaints-comment filter.  Shape: broadcast
     anti-join (the NOT IN) + distinct-count aggregation."""
     _utc(spark)
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    p = spark.read.parquet(f"{sf_dir}/part.parquet").filter(
+    l = _load_table(spark, sf_dir, "lineitem")
+    p = _load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35)
     )
     bad = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
+        _load_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
@@ -2230,8 +2226,8 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan Catalyst would also pick, written explicitly so the avg frame is
     computed once and stays broadcast-sized (one row per part)."""
     _utc(spark)
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    p = spark.read.parquet(f"{sf_dir}/part.parquet").filter(F.col("p_brand") == "Brand#3")
+    l = _load_table(spark, sf_dir, "lineitem")
+    p = _load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     # the correlated average only matters for the brand's parts, so the
     # semi-join lands BEFORE the aggregation: the agg hash table and the
     # broadcast frame shrink from |parts| to |brand parts| (~1/25), and at
@@ -2279,8 +2275,7 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-year demand).  Shape: two-level aggregation + dominance filter +
     LEFT SEMI join into the supplier dimension."""
     _utc(spark)
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
-    l, p, s, n = (rd(t) for t in ("lineitem", "part", "supplier", "nation"))
+    l, p, s, n = (_load_table(spark, sf_dir, t) for t in ("lineitem", "part", "supplier", "nation"))
     shipped = (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -2348,11 +2343,11 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE per-order aggregate (supplier count, R-supplier count) joined back
     — same rows, one shuffle instead of two self-joins."""
     _utc(spark)
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    l = _load_table(spark, sf_dir, "lineitem")
+    o = _load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     )
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    s = _load_table(spark, sf_dir, "supplier")
     fl = l.join(o, F.col("o_orderkey") == F.col("l_orderkey")).select(
         "l_orderkey", "l_suppkey", "l_returnflag"
     )
@@ -2973,7 +2968,8 @@ edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
 @_register("doc_dup_clusters", _dup_clusters_oracle())
 def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-components cluster assignment over the LSH near-dup graph
-    (min-label propagation; every doc labelled, singletons included)."""
+    (each component labelled by its minimum doc_id; every doc labelled,
+    singletons included)."""
     _utc(spark)
     from biggraphite_spark.operators.dedup import dup_clusters
 
@@ -5547,7 +5543,7 @@ def doc_corpus_novel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table, standing in for a day's arrivals) that do NOT LSH-collide
     with the historical corpus (the first half) survive.  Exercises the
     streaming dedup core (streaming/dedup.py near_dup_filter + the
-    shuffle-free projection-form signatures) end to end under the DuckDB
+    shuffle-free Arrow MinHash signatures) end to end under the DuckDB
     oracle — the same code foreachBatch runs per micro-batch."""
     _utc(spark)
     from biggraphite_spark.streaming.dedup import corpus_band_index, near_dup_filter

@@ -144,7 +144,6 @@ def kmeans(
     iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "arrow",
 ) -> DataFrame:
     """Lloyd's k-means: ``iters`` refinement rounds from the k lowest-id
     vectors, returning the final assignment (id, cluster, dist).
@@ -154,14 +153,14 @@ def kmeans(
     rounded means — is collected to the driver and becomes the next
     iteration's literals.  Nothing corpus-sized ever shuffles or collects.
 
-    ``method``: ``"arrow"`` (default) runs assignments through the
-    bit-exact vectorized twin (:func:`assign_clusters_arrow`); ``"expr"``
-    keeps the pure Column-expression form — identical results, pinned by
-    ``test_clustering.py`` and the shared DuckDB oracle.
+    Assignments run through :func:`assign_clusters_arrow`, the bit-exact
+    vectorized twin of :func:`assign_clusters` (pinned by
+    ``test_clustering.py`` and the shared DuckDB oracle).
     """
-    assign = assign_clusters_arrow if method == "arrow" else assign_clusters
-    centroids = _fit_centroids(embeddings, k, iters, id_col, vec_col, assign)
-    return assign(embeddings, centroids, id_col, vec_col).drop("v")
+    centroids = _fit_centroids(
+        embeddings, k, iters, id_col, vec_col, assign_clusters_arrow
+    )
+    return assign_clusters_arrow(embeddings, centroids, id_col, vec_col).drop("v")
 
 
 def semantic_dedup(
@@ -172,7 +171,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     blocks: int | None = None,
-    method: str = "arrow",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means the corpus, then inside each
     cluster drop every vector whose cosine to a LOWER-id cluster-mate
@@ -200,24 +198,34 @@ def semantic_dedup(
     parallelism of the quadratic stage.  Default: enough blocks to fill
     ``defaultParallelism`` when k alone would not.
 
-    ``method="arrow"`` (default) additionally runs BOTH hot loops through
-    the bit-exact vectorized twins (:mod:`.vectorized`): assignment via
-    :func:`assign_clusters_arrow`, and the within-cell pair stage as
-    ``applyInPandas`` tasks keyed on the SAME (cluster, block) salt
-    algebra — probe side one id-hash block per row, build side replicated
-    per block — evaluating the pair cosines in blocked numpy with the
-    same dim-sequential folds and the same HALF_UP 5-digit rounding.
-    Identical keep-set (pinned by an expr==arrow equality test and the
-    shared DuckDB oracle); measured ~50x less per-pair cost than the
-    interpreted HOF filter.  ``method="expr"`` keeps the pure join+Column
-    form, block-salted as above.
+    Both hot loops run through the bit-exact vectorized twins
+    (:mod:`.vectorized`): assignment via :func:`assign_clusters_arrow`,
+    and the within-cell pair stage as ``applyInPandas`` tasks keyed on
+    the (cluster, block) salt — see :func:`_semantic_dedup_arrow`.  The
+    keep-set is identical to the pure join+Column reference
+    :func:`_semantic_dedup_join` (pinned by test and the shared DuckDB
+    oracle); the Arrow pair stage measured ~50x less per-pair cost than
+    the interpreted HOF filter.
     """
-    from .similarity import dot_expr, norm_expr
+    return _semantic_dedup_arrow(
+        embeddings, k, iters, threshold, id_col, vec_col, blocks
+    )
 
-    if method == "arrow":
-        return _semantic_dedup_arrow(
-            embeddings, k, iters, threshold, id_col, vec_col, blocks
-        )
+
+def _semantic_dedup_join(
+    embeddings: DataFrame,
+    k: int,
+    iters: int,
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    blocks: int | None = None,
+) -> DataFrame:
+    """Pure join+Column reference for :func:`semantic_dedup` (tests only):
+    Column-expression assignment, then the block-salted within-cluster
+    self-join with the rounded cosine as a filter — the brute-force
+    semantics the Arrow pair stage is pinned to."""
+    from .similarity import dot_expr, norm_expr
 
     # norms precomputed per ROW before the self-join (the _paired_cosine
     # pattern): cosine_expr per PAIR would fold both 64-dim norms for each
@@ -280,24 +288,24 @@ def _semantic_dedup_arrow(
     blocks: int | None = None,
 ) -> DataFrame:
     """Arrow form of :func:`semantic_dedup`'s pair stage, BLOCK-SALTED like
-    the expr form: pair cosines evaluated in blocked numpy with the
-    fold-order dot products and HALF_UP rounding of :mod:`.vectorized` —
-    bit-identical keep decisions to the join+filter form at ~50x less
-    per-pair cost.
+    the :func:`_semantic_dedup_join` reference: pair cosines evaluated in
+    blocked numpy with the fold-order dot products and HALF_UP rounding of
+    :mod:`.vectorized` — bit-identical keep decisions to the join+filter
+    form at ~50x less per-pair cost.
 
     A bare ``groupBy("cluster")`` gives one ``applyInPandas`` task per
     cell, so at small k the quadratic stage runs on ≤k cores (sf10
     stretch table: k=8 at 421.9s vs k=80 at 38.0s on 32 cores).  The salt
-    algebra mirrors the expr join: the PROBE side keeps one id-hash block
-    per row, the BUILD side replicates every row to all ``blocks``
+    algebra mirrors the reference join: the PROBE side keeps one id-hash
+    block per row, the BUILD side replicates every row to all ``blocks``
     sub-blocks, and the grouping key becomes (cluster, blk) — k x blocks
     tasks.  Each probe row still meets every lower-id cluster-mate
     (exactly once per probe), and "dropped = any(cos >= thr over lower
     ids)" is idempotent under replication, so no distinct pass is needed.
     Per-pair cosines are computed by the same fold-order kernels whichever
     block a pair lands in, so the keep set is bit-identical to the
-    unsalted and expr forms (pinned by tests).  ``blocks=1`` skips the
-    union entirely (the k >= cores regime — zero salting overhead).
+    unsalted and reference forms (pinned by tests).  ``blocks=1`` skips
+    the union entirely (the k >= cores regime — zero salting overhead).
 
     Before the pair stage, EXACT-DUPLICATE vectors are collapsed to their
     min-id representative per (cluster, vector) group.  This is a pure
@@ -401,7 +409,7 @@ def _semantic_dedup_arrow(
         return _expand_reps(withrep, rep_out, id_col) if collapse else rep_out
 
     # salted: the pair-input subtree feeds both union branches — cached so
-    # the corpus scan + assignment runs once (the expr path does the same)
+    # the corpus scan + assignment runs once (the reference does the same)
     pair_input = pair_input.cache()
     probe = pair_input.withColumn(
         "blk", F.pmod(F.crc32(F.col(id_col).cast("string")), F.lit(blocks))

@@ -17,6 +17,8 @@ Beyond-reference operators for the training-data pipeline.  Design rules:
 
 from __future__ import annotations
 
+from typing import Literal
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -45,20 +47,15 @@ def shingles_col(text: Column, n: int = 3) -> Column:
 
 
 def with_shingles(
-    docs: DataFrame, text_col: str = "text", n: int = 3, method: str = "arrow"
+    docs: DataFrame, text_col: str = "text", n: int = 3
 ) -> DataFrame:
-    """(doc_id, shingles) for every document.  ``method="arrow"`` (default)
-    computes the shingle arrays in one ``mapInPandas`` pass — pure string
-    arithmetic, so the twin is exact by faithful replication: Python
-    ``str.split(" ")`` == Spark ``split`` at limit -1 (empty tokens kept),
-    ``dict.fromkeys`` == ``array_distinct`` (both keep first occurrence),
-    and the sub-n fallback joins the whole token list either way.  The
-    expression form (``shingles_col``) remains the column-level builder
-    the signature projection composes with."""
-    if method != "arrow":
-        return docs.select(
-            "doc_id", shingles_col(F.col(text_col), n).alias("shingles")
-        )
+    """(doc_id, shingles) for every document, computed in one
+    ``mapInPandas`` pass.  Pure string arithmetic, so it is exact against
+    the column-level builder :func:`shingles_col` by faithful
+    replication: Python ``str.split(" ")`` == Spark ``split`` at limit -1
+    (empty tokens kept), ``dict.fromkeys`` == ``array_distinct`` (both
+    keep first occurrence), and the sub-n fallback joins the whole token
+    list either way (pinned by tests)."""
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
@@ -77,8 +74,8 @@ def with_shingles(
             out = []
             for text in pdf[text_col]:
                 if text is None:
-                    # expr form: size(split(NULL)) = -1 < n, so the sub-n
-                    # branch fires and array(array_join(NULL)) is [NULL]
+                    # shingles_col: size(split(NULL)) = -1 < n, so the
+                    # sub-n branch fires and array(array_join(NULL)) is [NULL]
                     out.append([None])
                     continue
                 parts = text.split(" ")
@@ -723,14 +720,17 @@ def jaccard_prefix_pairs(
 
 def minhash_signatures(docs: DataFrame, k: int = DEFAULT_K, n: int = 3) -> DataFrame:
     """Per-doc MinHash signature: k min-aggregates in a single pass over the
-    exploded shingles (map-side combine keeps the shuffle tiny).
+    exploded shingles (map-side combine keeps the shuffle tiny).  Pure
+    Column expressions end to end — the form the DuckDB oracle mirrors and
+    the reference :func:`minhash_signatures_arrow`, the production kernel,
+    is pinned to.
 
     Hash economy: one md5 yields four independent 32-bit (8-hex-char)
     hash values, so k signatures cost only ceil(k/4) md5 evaluations per
     shingle — the dominant cost of the signature pass.
     """
-    exploded = with_shingles(docs, n=n).select(
-        "doc_id", F.explode("shingles").alias("sh")
+    exploded = docs.select(
+        "doc_id", F.explode(shingles_col(F.col("text"), n)).alias("sh")
     )
     # digests materialize in a PROJECTION before the aggregation: inside a
     # wide agg, common-subexpression elimination across aggregate functions
@@ -759,66 +759,11 @@ def minhash_signatures(docs: DataFrame, k: int = DEFAULT_K, n: int = 3) -> DataF
     )
 
 
-def minhash_signatures_projection(
-    docs: DataFrame, k: int = DEFAULT_K, n: int = 3, text_col: str = "text"
-) -> DataFrame:
-    """MinHash signatures as a pure per-row projection — bit-identical to
-    :func:`minhash_signatures` (same salted digests, same mins) with ZERO
-    shuffle: the k minima fold over each row's own shingle array instead of
-    explode + groupBy.
-
-    This is the STREAMING-SAFE form (a stateless projection runs unchanged
-    under Structured Streaming; the aggregation form would need watermarked
-    state), and on batch it trades the map-side-combine shuffle for in-row
-    array work — the right side of the trade whenever the signature pass
-    feeds a stream-static join rather than the batch self-join.  Each salt's
-    digest array is bound once (bind_col) so md5 runs once per (salt,
-    shingle).
-    """
-    from .text import bind_col
-
-    n_digests = (k + 3) // 4
-
-    # NB: factories, not default-arg lambdas — pyspark passes (element, index)
-    # to any 2-parameter lambda, so `lambda x, s=s:` would receive the INDEX
-    # as s (same trap as the lang_id marker_count note)
-    def digester(s: int):
-        return lambda x: F.md5(F.concat(F.lit(f"{s}:"), x))
-
-    def hex_slice(off: int):
-        return lambda d: F.substring(d, off, 8)
-
-    def sig(shv: Column) -> Column:
-        digest_arrays = F.array(
-            *[F.transform(shv, digester(s)) for s in range(n_digests)]
-        )
-        return bind_col(
-            digest_arrays,
-            lambda dsv: F.struct(
-                *[
-                    F.array_min(
-                        F.transform(
-                            F.element_at(dsv, j // 4 + 1),
-                            hex_slice((j % 4) * 8 + 1),
-                        )
-                    ).alias(f"h{j}")
-                    for j in range(k)
-                ]
-            ),
-        )
-
-    # emit via inline(): extracting the k fields from the struct column in a
-    # plain projection would re-evaluate the whole digest tree once PER
-    # FIELD (HOF expressions sit outside codegen subexpression elimination);
-    # a generator runs once per row and hands the fields out as columns
-    sig_struct = bind_col(shingles_col(F.col(text_col), n), sig)
-    return docs.select("doc_id", F.inline(F.array(sig_struct)))
-
-
 def minhash_signatures_arrow(
     docs: DataFrame, k: int = DEFAULT_K, n: int = 3, text_col: str = "text"
 ) -> DataFrame:
-    """Bit-exact Arrow twin of :func:`minhash_signatures_projection`
+    """Bit-exact Arrow twin of :func:`minhash_signatures`, and the one
+    signature kernel every LSH operator runs, batch and streaming
     (PERF.md finding 36 applied to the LSH build — the signature pass is
     the shared subtree of every pair-graph query).  The whole pipeline is
     integer/string arithmetic, so exactness needs only faithful
@@ -837,13 +782,13 @@ def minhash_signatures_arrow(
     - duplicate shingles within a doc are dropped (``dict.fromkeys``)
       before hashing — duplicates cannot change a min.
 
-    Measured ~5x over the HOF projection at sf0.1 (hashlib's C md5 vs
+    Measured ~5x over a pure-Column HOF form at sf0.1 (hashlib's C md5 vs
     interpreted transform trees), and another ~1.6x from the vectorized
     min/hex path (the per-batch kernel is md5-bound after it; a
     cross-batch uniq-dict variant was prototyped and measured SLOWER —
     dict/index overhead exceeds the md5 savings on distinct-text
-    corpora).  Pinned equal by test and by every LSH oracle downstream of
-    :func:`lsh_near_dups`.
+    corpora).  Pinned equal to :func:`minhash_signatures` by test and by
+    every LSH oracle downstream of :func:`lsh_near_dups`.
     """
     from pyspark.sql import types as T
 
@@ -872,7 +817,8 @@ def minhash_signatures_arrow(
             nulls: list[bool] = []
             for text in pdf[text_col]:
                 if text is None:
-                    # expr form: the whole digest tree nulls out on null text
+                    # minhash_signatures: null text explodes to one NULL
+                    # shingle, whose NULL digests make every min NULL
                     nulls.append(True)
                     continue
                 nulls.append(False)
@@ -983,7 +929,6 @@ def _lsh_rep_pairs(
     k: int = DEFAULT_K,
     bands: int = DEFAULT_BANDS,
     n: int = 3,
-    method: str = "arrow",
 ) -> DataFrame:
     """The LSH candidate + true-Jaccard verify core over ``base`` docs
     (the distinct-text representatives when collapsed, the raw corpus
@@ -998,12 +943,7 @@ def _lsh_rep_pairs(
     # one wide cache (band explode, both self-join sides) then pays to
     # deserialize the shingle arrays it does not need; two narrow caches
     # beat one Python-pass saving on the collapsed (small) base relation.
-    sig_fn = (
-        minhash_signatures_arrow
-        if method == "arrow"
-        else minhash_signatures_projection
-    )
-    sigs = sig_fn(base, k=k, n=n).cache()
+    sigs = minhash_signatures_arrow(base, k=k, n=n).cache()
     cands = lsh_candidate_pairs(sigs, k=k, bands=bands)
     sh = with_shingles(base, n=n).select("doc_id", "shingles").cache()
     pairs = (
@@ -1025,7 +965,6 @@ def lsh_near_dups_quotient(
     k: int = DEFAULT_K,
     bands: int = DEFAULT_BANDS,
     n: int = 3,
-    method: str = "arrow",
     collapse: bool | str = "auto",
     collapse_ratio: float = 0.8,
     with_weights: bool = False,
@@ -1061,7 +1000,7 @@ def lsh_near_dups_quotient(
     if not collapsed:
         return None
     rep_pairs = _lsh_rep_pairs(
-        base, threshold, k=k, bands=bands, n=n, method=method
+        base, threshold, k=k, bands=bands, n=n
     ).localCheckpoint(eager=False)
     membership = (
         members.filter(F.col("text").isNotNull())
@@ -1088,7 +1027,6 @@ def lsh_near_dups(
     k: int = DEFAULT_K,
     bands: int = DEFAULT_BANDS,
     n: int = 3,
-    method: str = "arrow",
     collapse: bool | str = "auto",
     collapse_ratio: float = 0.8,
 ) -> DataFrame:
@@ -1099,11 +1037,9 @@ def lsh_near_dups(
     candidate self-join and the shingle relation both sides of the verify
     join, and Spark does not dedupe common subtrees within one action —
     uncached, the signature subtree would execute four times.  Signatures
-    come from the PROJECTION form (bit-identical to the aggregation form,
-    pytest-pinned; ~2x faster at sf0.1 and zero shuffle), so the cached
-    relation is one scan-speed pass over the corpus.  ``method="arrow"``
-    (default) swaps in :func:`minhash_signatures_arrow` — same signatures
-    bit-for-bit, hashlib's C md5 instead of interpreted HOF trees.
+    come from :func:`minhash_signatures_arrow` (bit-identical to the
+    aggregation form, pytest-pinned; a per-row pass with zero shuffle), so
+    the cached relation is one scan-speed pass over the corpus.
 
     ``collapse`` (default "auto", distinct-ratio probed): signatures, band
     collisions and the Jaccard verify all depend only on the TEXT, so
@@ -1117,7 +1053,7 @@ def lsh_near_dups(
     the clone-squared saving compounds.
     """
     base, members, collapsed = _collapsed_texts(docs, "text", collapse, collapse_ratio)
-    rep_pairs = _lsh_rep_pairs(base, threshold, k=k, bands=bands, n=n, method=method)
+    rep_pairs = _lsh_rep_pairs(base, threshold, k=k, bands=bands, n=n)
     if not collapsed:
         return rep_pairs
     # barrier: pin the array_intersect verify to the rep relation —
@@ -1294,7 +1230,7 @@ def dup_clusters(
     n: int = 3,
     max_iters: int = 20,
     driver_max_edges: int = DRIVER_CC_MAX_EDGES,
-    cc_method: str = "auto",
+    cc_method: Literal["auto", "driver", "star"] = "auto",
     max_degree: int | None = None,
     collapse: bool | str = "auto",
     collapse_ratio: float = 0.8,
@@ -1320,20 +1256,12 @@ def dup_clusters(
       path-compressed union-find, broadcast the label map back.  One job +
       one broadcast join — no fixpoint loop, the shape production dedup
       pipelines use.
-    - **Large-star/small-star** (larger graphs — the distributed default,
+    - **Large-star/small-star** (larger graphs — the distributed path,
       :func:`_cc_star_labels`): O(log² n) rounds independent of graph
       diameter (Kiveris et al. 2014).
-    - **Distributed min-label propagation** (``cc_method="minlabel"``,
-      kept for A/B and for graphs known to have tiny diameter): each round
-      joins labels to the bidirectional edge list, takes the neighbourhood
-      min, and stops when the (monotonically decreasing) label sum is
-      unchanged.  Rounds = graph diameter.  Each round is
-      ``localCheckpoint``-ed: without it the self-referential join lineage
-      doubles per round and the planner, not the data, becomes the
-      bottleneck.
 
     ``cc_method``: "auto" (driver when the edge list fits, else star),
-    or force "driver" / "minlabel" / "star".
+    or force "driver" / "star".
 
     ``collapse`` (default "auto"): reduce the pair graph to its TWIN-CLASS
     QUOTIENT first (``graph._twin_quotient`` — components are class-uniform
@@ -1344,7 +1272,7 @@ def dup_clusters(
     The probe backs off on diverse graphs and the expanded flow below is
     untouched.
     """
-    if cc_method not in ("auto", "driver", "minlabel", "star"):
+    if cc_method not in ("auto", "driver", "star"):
         raise ValueError(f"unknown cc_method {cc_method!r}")
     if (
         quotient is None
@@ -1390,7 +1318,7 @@ def dup_clusters(
     # so the driver path is the overwhelmingly common case and saving its
     # extra action is one whole LSH-pipeline materialization fewer.
     head: list[tuple[int, int]] = []
-    overflow = cc_method in ("minlabel", "star")
+    overflow = cc_method == "star"
     if not overflow:
         for r in pair_ids.toLocalIterator():
             head.append((r["doc_a"], r["doc_b"]))
@@ -1416,54 +1344,10 @@ def dup_clusters(
             )
         else:
             labels = docs.select("doc_id", F.col("doc_id").alias("label"))
-    elif cc_method != "minlabel":
-        # distributed default: large-star/small-star, O(log² n) rounds
-        # independent of graph diameter
-        lab = _cc_star_labels(pair_ids, max_iters=max_iters)
-        pair_ids.unpersist()
-        labels = docs.join(lab, "doc_id", "left").select(
-            "doc_id", F.coalesce("label", "doc_id").alias("label")
-        )
     else:
-        edges = (
-            pair_ids.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-            .union(
-                pair_ids.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-            )
-            .cache()
-        )
-        # only nodes with at least one edge enter the fixpoint loop — the
-        # singleton majority never pays a propagation round
-        lab = (
-            edges.select(F.col("src").alias("doc_id"))
-            .distinct()
-            .select("doc_id", F.col("doc_id").alias("label"))
-            .localCheckpoint()
-        )
-        # labels only ever decrease, so sum(label) is strictly decreasing
-        # until the fixpoint: one cheap agg action per round
-        prev_sum = lab.agg(F.sum("label")).collect()[0][0]
-        for _ in range(max_iters):
-            neighbor_min = (
-                lab.join(edges, lab["doc_id"] == edges["src"])
-                .groupBy(F.col("dst").alias("doc_id"))
-                .agg(F.min("label").alias("nlabel"))
-            )
-            lab = (
-                lab.join(neighbor_min, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.least(
-                        F.col("label"), F.coalesce("nlabel", "label")
-                    ).alias("label"),
-                )
-                .localCheckpoint()
-            )
-            new_sum = lab.agg(F.sum("label")).collect()[0][0]
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-        edges.unpersist()
+        # distributed: large-star/small-star, O(log² n) rounds independent
+        # of graph diameter
+        lab = _cc_star_labels(pair_ids, max_iters=max_iters)
         pair_ids.unpersist()
         labels = docs.join(lab, "doc_id", "left").select(
             "doc_id", F.coalesce("label", "doc_id").alias("label")
@@ -1758,7 +1642,6 @@ def lsh_edit_verify(
     bands: int = DEFAULT_BANDS,
     n: int = 3,
     text_col: str = "text",
-    method: str = "arrow",
     collapse: bool | str = "auto",
     collapse_ratio: float = 0.8,
 ) -> DataFrame:
@@ -1770,9 +1653,7 @@ def lsh_edit_verify(
 
     Keeps pairs with relative distance ≤ ``max_rel_dist`` (distance over
     the longer text).  Integer distances are engine-exact; the one ratio
-    is rounded on the documented lattice.  ``method`` picks the signature
-    builder like every other LSH entry point — ``"arrow"`` (default) or
-    ``"expr"`` for the HOF projection form (bit-identical, debug path).
+    is rounded on the documented lattice.
 
     ``collapse`` (default "auto", distinct-ratio probed like the other
     pair operators): signatures, band collisions AND the DP all depend
@@ -1786,15 +1667,10 @@ def lsh_edit_verify(
     relation identical; on a clone-heavy corpus the DP count drops by the
     square of the duplication factor.
     """
-    sig_fn = (
-        minhash_signatures_arrow
-        if method == "arrow"
-        else minhash_signatures_projection
-    )
     base, members, collapsed = _collapsed_texts(
         docs.select("doc_id", text_col), text_col, collapse, collapse_ratio
     )
-    sigs = sig_fn(base, k=k, n=n, text_col=text_col).cache()
+    sigs = minhash_signatures_arrow(base, k=k, n=n, text_col=text_col).cache()
     cands = lsh_candidate_pairs(sigs, k=k, bands=bands)
     texts = base.select("doc_id", text_col)
     pairs = cands.join(

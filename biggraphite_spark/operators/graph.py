@@ -19,6 +19,8 @@ without it the plan, not the data, becomes the bottleneck.
 
 from __future__ import annotations
 
+from typing import Literal
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -137,7 +139,7 @@ def _twin_classes(membership: DataFrame) -> DataFrame:
 def _cc_from_twin_quotient(
     docs: DataFrame,
     pair_ids: DataFrame | None,
-    cc_method: str,
+    cc_method: Literal["auto", "driver", "star"],
     driver_max_edges: int,
     max_iters: int,
     collapse: bool | str,
@@ -950,7 +952,6 @@ def hits(
     nodes: DataFrame,
     id_col: str = "doc_id",
     iterations: int = 3,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """HITS hubs/authorities (Kleinberg 1999) over DIRECTED
     ``edges(src, dst)`` — in PURE INTEGER arithmetic.
@@ -986,8 +987,7 @@ def hits(
     # join+aggregation re-executed once inside its consumer — the same
     # replicated-subtree defect the rep-pair barrier fixed in dedup
     # (finding 46).  Rank relations are node-sized, so the per-round
-    # materialization is cheap; lineage also stays flat, which is what
-    # ``checkpoint_every`` bought before (kept for API compatibility).
+    # materialization is cheap, and lineage stays flat.
     for i in range(iterations):
         auth = (
             ed.join(hub, ed.src == hub.id)

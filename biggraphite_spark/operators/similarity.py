@@ -336,7 +336,6 @@ def ann_ivf_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "arrow",
 ) -> DataFrame:
     """IVF-style approximate top-k: assign every corpus vector to its nearest
     centroid cell, probe each query's ``nprobe`` closest cells, brute-force
@@ -351,20 +350,18 @@ def ann_ivf_topk(
     expressed as partition pruning; the only shuffle left is the per-query
     top-k over candidate similarities.
 
-    ``method="arrow"`` (default) runs the two HOF-interpretation-bound
-    loops — corpus cell assignment (rows x cells cosines) and candidate
-    scoring (one cosine per joined pair) — through the bit-exact numpy
-    twins (:func:`assign_cells_arrow`, the pair scorer of
-    :func:`_probe_topk`); ``"expr"`` keeps the pure Column forms.
+    The two HOF-interpretation-bound loops — corpus cell assignment (rows
+    x cells cosines) and candidate scoring (one cosine per joined pair) —
+    run through the bit-exact numpy twins :func:`assign_cells_arrow` and
+    :func:`paired_cosine_arrow`.
     """
     codebook = [
         (r["label"], list(r["cv"]))
         for r in centroid_vectors(embeddings, id_col, vec_col).collect()
     ]
-    assign = assign_cells_arrow if method == "arrow" else assign_cells
-    assigned = assign(embeddings, codebook, id_col, vec_col)
+    assigned = assign_cells_arrow(embeddings, codebook, id_col, vec_col)
     probed = probe_cells(queries, codebook, nprobe, id_col, vec_col)
-    return _probe_topk(assigned, probed, k, method=method)
+    return _probe_topk(assigned, probed, k)
 
 
 def assign_cells(
@@ -486,18 +483,11 @@ def probe_cells(
     ).select("query_id", "qv", "qn", (-F.col("probe.neg")).alias("cell"))
 
 
-def _probe_topk(
-    assigned: DataFrame, probed: DataFrame, k: int, method: str = "expr"
-) -> DataFrame:
+def _probe_topk(assigned: DataFrame, probed: DataFrame, k: int) -> DataFrame:
     pairs = assigned.join(F.broadcast(probed), "cell").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    if method == "arrow":
-        sims = paired_cosine_arrow(pairs, "qv", "qn", "cv", "cn")
-    else:
-        sims = pairs.select(
-            "query_id", "neighbor_id", _paired_cosine().alias("sim")
-        )
+    sims = paired_cosine_arrow(pairs, "qv", "qn", "cv", "cn")
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         sims.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -565,7 +555,6 @@ def ann_ivf_topk_filtered(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "arrow",
 ) -> DataFrame:
     """Filtered vector search: IVF top-k restricted to corpus vectors
     satisfying a metadata predicate — the "WHERE lang='en'" every vector
@@ -583,12 +572,11 @@ def ann_ivf_topk_filtered(
         (r["label"], list(r["cv"]))
         for r in centroid_vectors(embeddings, id_col, vec_col).collect()
     ]
-    assign = assign_cells_arrow if method == "arrow" else assign_cells
-    assigned = assign(
+    assigned = assign_cells_arrow(
         embeddings.filter(corpus_filter), codebook, id_col, vec_col
     )
     probed = probe_cells(queries, codebook, nprobe, id_col, vec_col)
-    return _probe_topk(assigned, probed, k, method=method)
+    return _probe_topk(assigned, probed, k)
 
 
 def write_ivf_corpus(
@@ -636,18 +624,16 @@ def ann_ivf_topk_partitioned(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "arrow",
 ) -> DataFrame:
     """IVF probe against a :func:`write_ivf_corpus` index — the 100 TB read
     path.  ``cell`` is a partition column, and the broadcast equi-join on it
     triggers dynamic partition pruning: only the probed cells' directories
     are scanned (asserted by test_similarity_partitioned via
     ``input_file_name``), so probe cost scales with nprobe/cells of the
-    corpus, not its size.  ``method`` picks the pair-scorer form (the
-    index on disk is form-independent)."""
+    corpus, not its size."""
     assigned = spark.read.parquet(path)
     probed = probe_cells(queries, codebook, nprobe, id_col, vec_col)
-    return _probe_topk(assigned, probed, k, method=method)
+    return _probe_topk(assigned, probed, k)
 
 
 def ann_ivfpq_topk(
@@ -659,7 +645,6 @@ def ann_ivfpq_topk(
     pq_k: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "arrow",
 ) -> DataFrame:
     """IVF-PQ: coarse cells prune the corpus, PQ codes compress what's left,
     queries score candidates by ASYMMETRIC distance — full-precision query
@@ -678,20 +663,13 @@ def ann_ivfpq_topk(
         for r in centroid_vectors(embeddings, id_col, vec_col).collect()
     ]
     pq_cb = pq_codebook(embeddings, m=m, k=pq_k, vec_col=vec_col, id_col=id_col)
-    assign = assign_cells_arrow if method == "arrow" else assign_cells
-    assigned = assign(embeddings, ivf_cb, id_col, vec_col)
-    if method == "arrow":
-        # the encode is the HOF-bound stage (PERF.md finding 29); the Arrow
-        # twin emits the identical codes (pq_codes_arrow docstring)
-        corpus = pq_codes_arrow(
-            assigned.select("neighbor_id", "cell", "cv"), pq_cb, m, "cv",
-            keep=("neighbor_id", "cell"),
-        )
-    else:
-        corpus = assigned.select(
-            "neighbor_id", "cell",
-            pq_code_expr(F.col("cv"), pq_cb, m).alias("code_arr"),
-        )
+    assigned = assign_cells_arrow(embeddings, ivf_cb, id_col, vec_col)
+    # the encode is the HOF-bound stage (PERF.md finding 29); the Arrow
+    # twin emits the identical codes (pq_codes_arrow docstring)
+    corpus = pq_codes_arrow(
+        assigned.select("neighbor_id", "cell", "cv"), pq_cb, m, "cv",
+        keep=("neighbor_id", "cell"),
+    )
     # Exchange barrier between encode and decode: without it CollapseProject
     # inlines the full per-subspace distance computation into every one of
     # the reconstruction's 64 element lookups (codes re-derived ~65x per
@@ -709,18 +687,9 @@ def ann_ivfpq_topk(
     pairs = candidates.join(F.broadcast(probed), "cell").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    if method == "arrow":
-        # the asymmetric-distance loop (full-precision query x PQ
-        # reconstruction) through the same bit-exact pair scorer
-        sims = paired_cosine_arrow(pairs, "qv", "qn", "rv", "rn")
-    else:
-        sims = pairs.select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot_expr(F.col("qv"), F.col("rv")) / (F.col("qn") * F.col("rn")), 5
-            ).alias("sim"),
-        )
+    # the asymmetric-distance loop (full-precision query x PQ
+    # reconstruction) through the same bit-exact pair scorer
+    sims = paired_cosine_arrow(pairs, "qv", "qn", "rv", "rn")
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         sims.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -913,7 +882,7 @@ def pq_codes_arrow(
     k=16, 64 dims), and the distance folds carry no rounding, so the
     numpy mirror — the same dim-sequential ``acc + diff*diff`` per
     subspace, first-occurrence argmin — reproduces the codes exactly
-    (pinned by an expr==arrow equality test and the shared oracles).
+    (pinned by a kernel-level equality test and the shared oracles).
     Input ``df`` must carry ``keep`` columns plus ``vec_col`` as
     array<double>; output is ``keep`` + ``code_arr`` (array<int>).
     Precondition: no null/NaN vectors (the corpus contract)."""
@@ -977,7 +946,6 @@ def pq_quantize(
     k: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    method: str = "arrow",
 ) -> DataFrame:
     """Product quantization: split each vector into ``m`` subspaces, assign
     every subvector to its nearest codebook centroid (L2, first-index
@@ -989,19 +957,16 @@ def pq_quantize(
     compressed corpus is dim/m bytes per vector, the standard memory layout
     for billion-scale ANN (Jégou et al. 2011).  All distance sums are
     explicit left-to-right folds so any engine replaying them gets
-    bit-identical codes.
+    bit-identical codes.  The encode runs through :func:`pq_codes_arrow`,
+    the bit-exact twin of :func:`pq_code_expr`.
     """
     if codebook is None:
         codebook = pq_codebook(emb, m=m, k=k, vec_col=vec_col, id_col=id_col)
     v = as_double_array(F.col(vec_col))
-    if method == "arrow":
-        with_codes = pq_codes_arrow(
-            emb.select(id_col, v.alias("v")), codebook, m, "v",
-            keep=(id_col, "v"),
-        )
-    else:
-        codes = pq_code_expr(v, codebook, m)
-        with_codes = emb.select(id_col, v.alias("v"), codes.alias("code_arr"))
+    with_codes = pq_codes_arrow(
+        emb.select(id_col, v.alias("v")), codebook, m, "v",
+        keep=(id_col, "v"),
+    )
     recon = pq_recon_expr(F.col("code_arr"), codebook, m)
     scored = with_codes.select(
         id_col,

@@ -7,9 +7,9 @@ each other" (``dropDuplicatesWithinWatermark`` handles the exact case) but
 that answers it at scale:
 
 - signatures are stateless per-row (no aggregation state or watermark):
-  the Arrow twin by default (``foreachBatch`` hands the sink a plain batch
-  DataFrame, so ``mapInPandas`` is legal and ~5x), the pure-Column
-  projection form via ``method="projection"`` for continuous plans;
+  :func:`minhash_signatures_arrow` for the index build and the probe alike
+  (``foreachBatch`` hands the sink a plain batch DataFrame, so
+  ``mapInPandas`` is legal there);
 - the corpus side is a (band, key) index built ONCE from the historical
   signatures (``band_keys``) and written partitioned/bucketed by key, so
   each micro-batch's probe is an equi-join that prunes to the touched
@@ -36,23 +36,7 @@ from ..operators.dedup import (
     DEFAULT_K,
     band_keys,
     minhash_signatures_arrow,
-    minhash_signatures_projection,
 )
-
-
-def _signatures(docs: DataFrame, k: int, n: int, method: str) -> DataFrame:
-    """Signature pass, method-switchable: both forms are bit-identical
-    (pinned in tests/test_streaming_dedup.py and by every LSH oracle), so
-    index and probe may each pick their fastest legal form.  "arrow"
-    (hashlib's C md5 via mapInPandas, ~5x) is the default everywhere this
-    module computes signatures — the index build is a batch job, and the
-    probe runs inside foreachBatch where the micro-batch is a plain batch
-    DataFrame; "projection" (pure Column expressions) remains for callers
-    embedding the signature pass in a CONTINUOUS streaming plan outside
-    foreachBatch, where mapInPandas would force the Arrow serialization
-    boundary into the always-on path."""
-    fn = minhash_signatures_arrow if method == "arrow" else minhash_signatures_projection
-    return fn(docs, k=k, n=n)
 
 
 def _bkey(banded: DataFrame) -> DataFrame:
@@ -67,19 +51,17 @@ def _bkey(banded: DataFrame) -> DataFrame:
 
 
 def corpus_band_index(corpus_docs: DataFrame, k: int = DEFAULT_K,
-                      bands: int = DEFAULT_BANDS, n: int = 3,
-                      method: str = "arrow") -> DataFrame:
+                      bands: int = DEFAULT_BANDS, n: int = 3) -> DataFrame:
     """``bkey`` index of the historical corpus — build once; persist with
     :func:`write_band_index` so stream probes hit the bucketed layout."""
     return _bkey(
-        band_keys(_signatures(corpus_docs, k, n, method), k=k, bands=bands)
+        band_keys(minhash_signatures_arrow(corpus_docs, k=k, n=n), k=k, bands=bands)
     ).select("bkey").distinct()
 
 
 def write_band_index(corpus_docs: DataFrame, path: str, table: str,
                      k: int = DEFAULT_K, bands: int = DEFAULT_BANDS,
-                     n: int = 3, n_buckets: int = 32,
-                     method: str = "arrow") -> str:
+                     n: int = 3, n_buckets: int = 32) -> str:
     """Persist the corpus band index hash-bucketed by ``bkey``: the layout
     that makes every probe join exchange-free on the index side.
 
@@ -92,7 +74,7 @@ def write_band_index(corpus_docs: DataFrame, path: str, table: str,
     spark = corpus_docs.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     (
-        corpus_band_index(corpus_docs, k=k, bands=bands, n=n, method=method)
+        corpus_band_index(corpus_docs, k=k, bands=bands, n=n)
         .write.format("parquet")
         .bucketBy(n_buckets, "bkey")
         .sortBy("bkey")
@@ -105,8 +87,7 @@ def write_band_index(corpus_docs: DataFrame, path: str, table: str,
 
 def near_dup_filter(docs: DataFrame, corpus_index: DataFrame,
                     k: int = DEFAULT_K, bands: int = DEFAULT_BANDS,
-                    n: int = 3, method: str = "arrow",
-                    probe: str = "bucketed") -> DataFrame:
+                    n: int = 3, probe: str = "bucketed") -> DataFrame:
     """Batch core (also the per-micro-batch body): drop every doc whose
     LSH banding collides with the corpus index.
 
@@ -124,7 +105,7 @@ def near_dup_filter(docs: DataFrame, corpus_index: DataFrame,
       above that, fall back to "bucketed".  The saturation bench
       (scripts/bench_streaming_dedup.py) measures both.
     """
-    sigs = _signatures(docs, k, n, method)
+    sigs = minhash_signatures_arrow(docs, k=k, n=n)
     keyed = _bkey(band_keys(sigs, k=k, bands=bands))
     index = (
         F.broadcast(corpus_index) if probe == "broadcast" else corpus_index

@@ -20,6 +20,7 @@ one writer and Spark's thread-safe query path serves concurrent readers.
 from __future__ import annotations
 
 import json
+import logging
 import re
 import threading
 import time
@@ -202,6 +203,15 @@ class _Handler(BaseHTTPRequestHandler):
     def log_message(self, fmt, *args):  # quiet by default; tests capture rc
         pass
 
+    def _send_error(self, ex: Exception) -> None:
+        """500 for any failure the route did not map to a 4xx (a failed
+        Spark job, a bug): the traceback is logged, the client gets a
+        reply instead of a dropped socket, and the server keeps serving."""
+        logging.getLogger(__name__).exception(
+            "%s %s failed", self.command, self.path
+        )
+        self._send(500, {"message": f"{type(ex).__name__}: {ex}"})
+
     # -- routes ------------------------------------------------------------
     def do_GET(self):
         url = urlparse(self.path)
@@ -221,6 +231,8 @@ class _Handler(BaseHTTPRequestHandler):
                     return self._send(200, list(self.app.bgutil.tasks))
         except (InvalidArgumentError, TooManyMetrics) as ex:
             return self._send(400, {"message": str(ex)})
+        except Exception as ex:
+            return self._send_error(ex)
         return self._send(404, {"message": "unknown route"})
 
     def do_POST(self):
@@ -248,6 +260,8 @@ class _Handler(BaseHTTPRequestHandler):
                 return self._send(404, {"message": str(ex)})
             except (InvalidArgumentError, ValueError) as ex:
                 return self._send(400, {"message": str(ex)})
+            except Exception as ex:
+                return self._send_error(ex)
         if not (len(parts) == 3 and parts[0] == "biggraphite" and parts[1] == "metric"):
             return self._send(404, {"message": "unknown route"})
         try:
@@ -258,6 +272,8 @@ class _Handler(BaseHTTPRequestHandler):
             return self._send(404, {"message": "unknown metric"})
         except (InvalidArgumentError, KeyError, ValueError) as ex:
             return self._send(400, {"message": str(ex)})
+        except Exception as ex:
+            return self._send_error(ex)
 
 
 def make_server(app: CatalogWeb, port: int = 0) -> ThreadingHTTPServer:
@@ -810,6 +826,7 @@ class _GraphiteHandler(BaseHTTPRequestHandler):
     app: GraphiteWeb  # set by make_graphite_server
 
     _send = _Handler._send
+    _send_error = _Handler._send_error
     log_message = _Handler.log_message
 
     def _send_text(self, code: int, text: str, ctype: str) -> None:
@@ -824,12 +841,12 @@ class _GraphiteHandler(BaseHTTPRequestHandler):
 
     def do_POST(self):
         url = urlparse(self.path)
-        length = int(self.headers.get("Content-Length") or 0)
-        body = self.rfile.read(length).decode() if length else ""
-        if url.path in ("/events", "/events/"):
-            return self._post_event(body)
-        form = parse_qs(body)
         try:
+            length = int(self.headers.get("Content-Length") or 0)
+            body = self.rfile.read(length).decode() if length else ""
+            if url.path in ("/events", "/events/"):
+                return self._post_event(body)
+            form = parse_qs(body)
             if url.path == "/render":
                 # graphite clients (incl. graphite-web's own composer) POST
                 # render requests with a form body; same contract as GET
@@ -851,6 +868,8 @@ class _GraphiteHandler(BaseHTTPRequestHandler):
                 return self._send(200, self.app.del_series(paths))
         except (InvalidArgumentError, TooManyMetrics, ValueError) as ex:
             return self._send(400, {"message": str(ex)})
+        except Exception as ex:
+            return self._send_error(ex)
         return self._send(404, {"message": "unknown route"})
 
     def _post_event(self, body: str) -> None:
@@ -985,6 +1004,8 @@ class _GraphiteHandler(BaseHTTPRequestHandler):
                 return self._render(q)
         except (InvalidArgumentError, TooManyMetrics, ValueError) as ex:
             return self._send(400, {"message": str(ex)})
+        except Exception as ex:
+            return self._send_error(ex)
         return self._send(404, {"message": "unknown route"})
 
     def _render(self, q: dict) -> None:

@@ -47,10 +47,12 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from biggraphite_spark.operators.dedup import band_keys
+    from biggraphite_spark.operators.dedup import (
+        band_keys,
+        minhash_signatures_arrow,
+    )
     from biggraphite_spark.streaming.dedup import (
         _bkey,
-        _signatures,
         near_dup_filter,
         write_band_index,
     )
@@ -105,7 +107,7 @@ def main() -> None:
             best = min(best, time.time() - t0)
         return round(best, 3)
 
-    sigs = _signatures(batch, 16, 3, "arrow")
+    sigs = minhash_signatures_arrow(batch, k=16, n=3)
     keyed = _bkey(band_keys(sigs))
     stages = {
         "batch_scan": timed(batch),

@@ -70,7 +70,7 @@ def main() -> None:
 
     from biggraphite_spark.operators.dedup import (
         band_keys,
-        minhash_signatures_projection,
+        minhash_signatures_arrow,
     )
     from biggraphite_spark.streaming.dedup import (
         _bkey,
@@ -109,7 +109,7 @@ def main() -> None:
             "text"
         ),
     )
-    probe = _bkey(band_keys(minhash_signatures_projection(probe_docs))).join(
+    probe = _bkey(band_keys(minhash_signatures_arrow(probe_docs))).join(
         index.hint("merge"), "bkey"
     )
     prev = spark.conf.get("spark.sql.adaptive.enabled")

@@ -109,7 +109,10 @@ def test_semantic_dedup_block_salting_preserves_pairs(spark):
     within-cluster pair meets exactly once whatever the block count, so
     the keep-set is identical at blocks=1 (the unsalted shape), the
     default, and a block count larger than any cluster."""
-    from biggraphite_spark.operators.clustering import semantic_dedup
+    from biggraphite_spark.operators.clustering import (
+        _semantic_dedup_arrow,
+        _semantic_dedup_join,
+    )
 
     import random
 
@@ -122,21 +125,24 @@ def test_semantic_dedup_block_salting_preserves_pairs(spark):
     outs = [
         sorted(
             (r["vec_id"], r["cluster"], r["keep"])
-            for r in semantic_dedup(
-                df, k=2, iters=2, threshold=0.999, blocks=b, method=m
+            for r in fn(
+                df, 2, 2, 0.999, "vec_id", "embedding", blocks=b
             ).collect()
         )
         for b in (1, None, 17)
-        for m in ("expr", "arrow")
+        for fn in (_semantic_dedup_join, _semantic_dedup_arrow)
     ]
     assert all(o == outs[0] for o in outs[1:])
     assert any(not keep for _, _, keep in outs[0])  # the dedup actually fired
 
 
 def test_semantic_dedup_arrow_equals_expr(spark):
-    """The Arrow pair stage and the join+filter form are bit-exact twins
-    (same fold order, same HALF_UP rounding): identical keep-sets."""
-    from biggraphite_spark.operators.clustering import semantic_dedup
+    """The Arrow pair stage and the join+filter reference are bit-exact
+    twins (same fold order, same HALF_UP rounding): identical keep-sets."""
+    from biggraphite_spark.operators.clustering import (
+        _semantic_dedup_arrow,
+        _semantic_dedup_join,
+    )
 
     import random
 
@@ -148,24 +154,26 @@ def test_semantic_dedup_arrow_equals_expr(spark):
     )]
     df = _emb(spark, rows)
     got = {
-        m: sorted(
+        fn.__name__: sorted(
             (r["vec_id"], r["cluster"], r["keep"])
-            for r in semantic_dedup(
-                df, k=3, iters=2, threshold=0.98, method=m
-            ).collect()
+            for r in fn(df, 3, 2, 0.98, "vec_id", "embedding").collect()
         )
-        for m in ("expr", "arrow")
+        for fn in (_semantic_dedup_join, _semantic_dedup_arrow)
     }
-    assert got["expr"] == got["arrow"]
+    assert got["_semantic_dedup_join"] == got["_semantic_dedup_arrow"]
 
 
 def test_semantic_dedup_clone_collapse_matches_brute_force(spark):
     """The arrow path's exact-duplicate collapse (min-id representative per
     (cluster, vector) group enters the pair stage; members inherit the
     drop) is a pure optimization: on a heavily clone-replicated corpus —
-    the regime it exists for — the keep-set matches the brute-force expr
-    join exactly, including across interleaved group ids."""
-    from biggraphite_spark.operators.clustering import semantic_dedup
+    the regime it exists for — the keep-set matches the brute-force
+    join+filter reference exactly, including across interleaved group
+    ids."""
+    from biggraphite_spark.operators.clustering import (
+        _semantic_dedup_join,
+        semantic_dedup,
+    )
 
     import random
 
@@ -180,40 +188,68 @@ def test_semantic_dedup_clone_collapse_matches_brute_force(spark):
         (1000 + g, [v * 1.00005 for v in distinct[g]]) for g in range(6)
     ]
     df = _emb(spark, rows)
-    got = {
-        m: sorted(
-            (r["vec_id"], r["cluster"], r["keep"])
-            for r in semantic_dedup(
-                df, k=3, iters=2, threshold=0.98, method=m
-            ).collect()
-        )
-        for m in ("expr", "arrow")
-    }
-    assert got["expr"] == got["arrow"]
-    kept = [vid for vid, _, keep in got["arrow"] if keep]
+    got = sorted(
+        (r["vec_id"], r["cluster"], r["keep"])
+        for r in semantic_dedup(df, k=3, iters=2, threshold=0.98).collect()
+    )
+    ref = sorted(
+        (r["vec_id"], r["cluster"], r["keep"])
+        for r in _semantic_dedup_join(
+            df, 3, 2, 0.98, "vec_id", "embedding"
+        ).collect()
+    )
+    assert got == ref
+    kept = [vid for vid, _, keep in got if keep]
     # every clone group collapses to exactly its lowest id (vec_ids 0..11),
     # and the scaled near-dups (cos ~ 1) are dropped against them
     assert set(kept) == set(range(12))
 
 
 def test_kmeans_arrow_equals_expr(spark):
-    from biggraphite_spark.operators.clustering import kmeans
+    """assign_clusters_arrow (the kernel kmeans runs) is a bit-exact twin
+    of the Column form assign_clusters: same clusters and distances on a
+    random corpus, through every refinement round, and on assignment ties
+    — exact ties, ties created by the 6-digit rounding, and centroids
+    listed out of index order all go to the lowest cluster index."""
+    from biggraphite_spark.operators.clustering import (
+        _fit_centroids,
+        assign_clusters_arrow,
+    )
 
     import random
+
+    def rows(fn, df, centroids):
+        return sorted(
+            (r["vec_id"], r["cluster"], r["dist"])
+            for r in fn(df, centroids).collect()
+        )
 
     rng = random.Random(13)
     df = _emb(
         spark,
         [(i, [rng.uniform(-2, 2) for _ in range(6)]) for i in range(120)],
     )
-    got = {
-        m: sorted(
-            (r["vec_id"], r["cluster"], r["dist"])
-            for r in kmeans(df, k=4, iters=3, method=m).collect()
-        )
-        for m in ("expr", "arrow")
+    fits = {
+        fn: _fit_centroids(df, 4, 3, assign=fn)
+        for fn in (assign_clusters, assign_clusters_arrow)
     }
-    assert got["expr"] == got["arrow"]
+    assert fits[assign_clusters] == fits[assign_clusters_arrow]
+    cents = fits[assign_clusters]
+    assert rows(assign_clusters_arrow, df, cents) == rows(assign_clusters, df, cents)
+    got = sorted(tuple(r) for r in kmeans(df, k=4, iters=3).collect())
+    assert got == rows(assign_clusters, df, cents)
+
+    ties = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0000001, 0.0]), (3, [1.0, 5.0]), (4, [3.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    for cents in (
+        [(0, [0.0, 0.0]), (1, [2.0, 0.0]), (2, [2.0, 0.0])],
+        [(2, [2.0, 0.0]), (1, [2.0, 0.0]), (0, [0.0, 0.0])],
+    ):
+        want = rows(assign_clusters, ties, cents)
+        assert rows(assign_clusters_arrow, ties, cents) == want
+        assert [c for _, c, _ in want] == [0, 0, 0, 1]
 
 
 def test_round_half_up_vectorized_matches_spark_semantics():

@@ -48,33 +48,33 @@ def test_shingles(docs):
 
 
 def test_shingles_and_signatures_null_text_parity(spark):
-    """Null text must not kill the Arrow twins (AttributeError on
-    .split) — both forms agree: shingles [NULL] (the expr sub-n branch
-    fires on size(NULL)=-1), signatures all-NULL."""
+    """Null text must not kill the Arrow kernels (AttributeError on
+    .split) — each agrees with its pure-Column reference: shingles [NULL]
+    (the shingles_col sub-n branch fires on size(NULL)=-1), signatures
+    all-NULL."""
     from biggraphite_spark.operators.dedup import (
+        minhash_signatures,
         minhash_signatures_arrow,
-        minhash_signatures_projection,
+        shingles_col,
     )
 
     df = spark.createDataFrame(
         [(1, "a b c d"), (2, None), (3, "x y")], "doc_id long, text string"
     )
-    sh = {
-        m: sorted(
-            (r.doc_id, r.shingles)
-            for r in with_shingles(df, method=m).collect()
-        )
-        for m in ("arrow", "expr")
-    }
-    assert sh["arrow"] == sh["expr"]
-    assert dict(sh["arrow"])[2] == [None]
+    arrow = sorted((r.doc_id, r.shingles) for r in with_shingles(df).collect())
+    ref = sorted(
+        (r.doc_id, r.shingles)
+        for r in df.select("doc_id", shingles_col(F.col("text")).alias("shingles"))
+        .collect()
+    )
+    assert arrow == ref
+    assert dict(arrow)[2] == [None]
     sig_a = sorted(
         tuple(r) for r in minhash_signatures_arrow(df, k=8).collect()
     )
-    sig_e = sorted(
-        tuple(r) for r in minhash_signatures_projection(df, k=8).collect()
-    )
-    assert sig_a == sig_e
+    sig_r = sorted(tuple(r) for r in minhash_signatures(df, k=8).collect())
+    assert sig_a == sig_r
+    assert [h for r in sig_a if r[0] == 2 for h in r[1:]] == [None] * 8
 
 
 def test_ngram_jaccard_finds_near_dup(docs):

@@ -158,27 +158,74 @@ def test_weighted_sample_reproducible_and_weight_biased(spark):
 
 
 def test_pq_quantize_arrow_equals_expr(spark):
-    """The Arrow PQ encode is a bit-exact twin of the expression form
-    (same fold order, no rounding in the distances, first-index argmin):
-    identical codes and reconstruction cosines."""
+    """pq_codes_arrow (the encode pq_quantize runs) is a bit-exact twin of
+    the expression form pq_code_expr (same fold order, no rounding in the
+    distances, first-index argmin): identical codes on a random corpus
+    and on ties — a duplicated codebook centroid and a subvector
+    equidistant from two centroids both code to the lower index — and
+    pq_quantize's output equals the expression-form reference."""
     import random
 
-    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    from biggraphite_spark.operators.similarity import (
+        dot_expr,
+        norm_expr,
+        pq_code_expr,
+        pq_codebook,
+        pq_codes_arrow,
+        pq_recon_expr,
+    )
+
+    def codes(df, cb, m):
+        arrow = sorted(
+            (r["vec_id"], tuple(r["code_arr"]))
+            for r in pq_codes_arrow(df, cb, m, "v", keep=("vec_id",)).collect()
+        )
+        ref = sorted(
+            (r["vec_id"], tuple(r["code_arr"]))
+            for r in df.select(
+                "vec_id", pq_code_expr(F.col("v"), cb, m).alias("code_arr")
+            ).collect()
+        )
+        assert arrow == ref
+        return dict(ref)
 
     rng = random.Random(17)
     emb = spark.createDataFrame(
-        [
-            Row(vec_id=i, embedding=[rng.uniform(-1, 1) for _ in range(16)])
-            for i in range(80)
-        ]
+        [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(80)],
+        "vec_id long, embedding array<double>",
     )
-    got = {
-        m: sorted(
-            (r["vec_id"], r["pq_codes"], r["recon_cosine"])
-            for r in __import__(
-                "biggraphite_spark.operators.similarity", fromlist=["pq_quantize"]
-            ).pq_quantize(emb, m=4, k=8, method=m).collect()
-        )
-        for m in ("expr", "arrow")
-    }
-    assert got["expr"] == got["arrow"]
+    cb = pq_codebook(emb, m=4, k=8)
+    codes(emb.select("vec_id", F.col("embedding").alias("v")), cb, 4)
+
+    tie_cb = [
+        [0.0, 0.0, 0.0, 0.0],
+        [2.0, 0.0, 2.0, 0.0],
+        [2.0, 0.0, 2.0, 0.0],
+        [0.0, 0.0, 4.0, 0.0],
+    ]
+    ties = spark.createDataFrame(
+        [(1, [1.0, 0.0, 2.0, 0.0]), (2, [0.0, 0.0, 3.0, 0.0])],
+        "vec_id long, v array<double>",
+    )
+    assert codes(ties, tie_cb, 2) == {1: (0, 1), 2: (0, 1)}
+
+    v = F.col("embedding")
+    recon = pq_recon_expr(pq_code_expr(v, cb, 4), cb, 4)
+    ref = sorted(
+        tuple(r)
+        for r in emb.select(
+            "vec_id",
+            F.array_join(
+                F.transform(pq_code_expr(v, cb, 4), lambda c: c.cast("string")),
+                ",",
+            ).alias("pq_codes"),
+            F.round(
+                dot_expr(v, recon) / (norm_expr(v) * norm_expr(recon)), 5
+            ).alias("recon_cosine"),
+        ).collect()
+    )
+    got = sorted(tuple(r) for r in pq_quantize(emb, cb, m=4).collect())
+    assert got == ref
+

@@ -167,18 +167,23 @@ def test_refresh_ivf_appends_equal_full_rebuild(spark, tmpdir):
 
 
 def test_ivf_and_ivfpq_arrow_equals_expr(spark):
-    """The Arrow probe twins (assign_cells_arrow + paired_cosine_arrow) are
-    bit-exact against the HOF expression forms: identical (query, neighbor,
-    sim, rank) sets for both ann_ivf_topk and ann_ivfpq_topk, and the
-    standalone cell assignment matches row-for-row including ties."""
+    """The Arrow probe kernels the IVF family runs are bit-exact against
+    their Column references: assign_cells_arrow == assign_cells row for
+    row (ties included: equal rounded cosines go to the smallest label),
+    and paired_cosine_arrow == _paired_cosine on both pair shapes — the
+    IVF probe (query x corpus vector) and the IVF-PQ probe (query x PQ
+    reconstruction)."""
     import random
 
     from biggraphite_spark.operators.similarity import (
-        ann_ivf_topk,
-        ann_ivfpq_topk,
-        assign_cells,
+        _paired_cosine,
         assign_cells_arrow,
         centroid_vectors,
+        norm_expr,
+        paired_cosine_arrow,
+        pq_code_expr,
+        pq_codebook,
+        pq_recon_expr,
     )
 
     rng = random.Random(42)
@@ -190,26 +195,60 @@ def test_ivf_and_ivfpq_arrow_equals_expr(spark):
         rows, "vec_id long, embedding array<double>, label int"
     )
     q = emb.filter(F.col("vec_id") < 4)
-
-    for fn in (ann_ivf_topk, ann_ivfpq_topk):
-        got = {
-            m: sorted(
-                tuple(r)
-                for r in fn(emb, q, nprobe=2, k=5, method=m).collect()
-            )
-            for m in ("expr", "arrow")
-        }
-        assert got["expr"] == got["arrow"], fn.__name__
-
     codebook = [
         (r["label"], list(r["cv"])) for r in centroid_vectors(emb).collect()
     ]
-    a = sorted(
-        (r["neighbor_id"], r["cell"], r["cn"])
-        for r in assign_cells_arrow(emb, codebook).collect()
+
+    def cells(fn, df, cb):
+        return sorted(
+            (r["neighbor_id"], r["cell"], r["cn"], tuple(r["cv"]))
+            for r in fn(df, cb).collect()
+        )
+
+    assert cells(assign_cells_arrow, emb, codebook) == cells(
+        assign_cells, emb, codebook
     )
-    e = sorted(
-        (r["neighbor_id"], r["cell"], r["cn"])
-        for r in assign_cells(emb, codebook).collect()
+    ties = _corpus(spark, n=6).union(
+        spark.createDataFrame(
+            [(90, [1.0, 0.0, 1.0, 0.0]), (91, [2.0, 0.0, 2.0, 0.0])],
+            "vec_id long, embedding array<double>",
+        )
     )
-    assert a == e
+    for cb in (CODEBOOK, CODEBOOK[::-1]):
+        want = cells(assign_cells, ties, cb)
+        assert cells(assign_cells_arrow, ties, cb) == want
+        assert {i: c for i, c, _, _ in want}[90] == 0
+        assert {i: c for i, c, _, _ in want}[91] == 0
+
+    def sims(pairs, b_vec, b_norm):
+        arrow = sorted(
+            tuple(r)
+            for r in paired_cosine_arrow(pairs, "qv", "qn", b_vec, b_norm).collect()
+        )
+        ref = sorted(
+            tuple(r)
+            for r in pairs.select(
+                "query_id",
+                "neighbor_id",
+                "qv",
+                "qn",
+                F.col(b_vec).alias("cv"),
+                F.col(b_norm).alias("cn"),
+            )
+            .select("query_id", "neighbor_id", _paired_cosine().alias("sim"))
+            .collect()
+        )
+        assert arrow == ref
+        return arrow
+
+    probed = probe_cells(q, codebook, nprobe=2)
+    corpus = assign_cells(emb, codebook)
+    assert sims(corpus.join(probed, "cell"), "cv", "cn")
+
+    pq_cb = pq_codebook(emb, m=4, k=8)
+    recon = corpus.select(
+        "neighbor_id",
+        "cell",
+        pq_recon_expr(pq_code_expr(F.col("cv"), pq_cb, 4), pq_cb, 4).alias("rv"),
+    ).withColumn("rn", norm_expr(F.col("rv")))
+    assert sims(recon.join(probed, "cell"), "rv", "rn")

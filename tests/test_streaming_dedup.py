@@ -1,9 +1,10 @@
 """Streaming near-dup dedup against a historical corpus index.
 
 Pins three contracts:
-- the projection-form MinHash signatures are BIT-IDENTICAL to the
-  aggregation form (same salted digests, same minima) — the property that
-  lets the stream and the batch corpus share one keying;
+- the Arrow MinHash kernel and the Arrow shingle pass are BIT-IDENTICAL
+  to their pure-Column references (same salted digests, same minima, same
+  shingle arrays) — the property that lets the stream and the batch
+  corpus share one keying;
 - the batch core drops exactly the docs whose banding collides with the
   index (near-dups of corpus docs go, novel docs stay);
 - the foreachBatch streaming query reproduces the batch answer across
@@ -19,7 +20,9 @@ from pyspark.sql import functions as F
 
 from biggraphite_spark.operators.dedup import (
     minhash_signatures,
-    minhash_signatures_projection,
+    minhash_signatures_arrow,
+    shingles_col,
+    with_shingles,
 )
 from biggraphite_spark.streaming.dedup import (
     corpus_band_index,
@@ -52,43 +55,42 @@ def dirs():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_projection_signatures_match_aggregation_form(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
-    agg = {r["doc_id"]: r.asDict() for r in minhash_signatures(docs).collect()}
-    proj = {r["doc_id"]: r.asDict() for r in minhash_signatures_projection(docs).collect()}
-    assert agg == proj
+# edge inputs every text kernel must reproduce: fewer than n tokens, empty
+# text, empty tokens (runs of spaces, leading/trailing), repeated tokens
+# and shingles, non-ASCII, and null text
+EDGE_ROWS = [
+    (900001, "one two"),
+    (900002, ""),
+    (900003, "a  b   c d"),
+    (900004, " leading and trailing "),
+    (900005, "uni çödé tøkens reppeat uni çödé tøkens"),
+    (900006, "a  b   c d a  b   c d"),
+    (900007, "x x x x x"),
+    (900008, None),
+]
 
 
-def test_arrow_signatures_match_projection_form(spark):
-    """All three signature forms are bit-identical — the Arrow twin must
-    reproduce the split/md5/min pipeline exactly, including the degenerate
-    short-text branch and empty-token behaviour of split-on-space."""
-    from pyspark.sql import Row
-
-    from biggraphite_spark.operators.dedup import minhash_signatures_arrow
-
+def _kernel_inputs(spark):
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).limit(60)
-    edge = spark.createDataFrame(
-        [
-            Row(doc_id=900001, text="one two"),          # < n tokens
-            Row(doc_id=900002, text=""),                  # empty text
-            Row(doc_id=900003, text="a  b   c d"),        # empty tokens
-            Row(doc_id=900004, text=" leading and trailing "),
-            Row(doc_id=900005, text="uni çödé tøkens reppeat uni çödé tøkens"),
-        ]
+    return (
+        docs.select("doc_id", "text"),
+        spark.createDataFrame(EDGE_ROWS, DOC_SCHEMA),
     )
-    for df in (docs.select("doc_id", "text"), edge):
-        proj = {
-            r["doc_id"]: r.asDict()
-            for r in minhash_signatures_projection(df).collect()
-        }
+
+
+def test_arrow_signatures_match_aggregation_form(spark):
+    """The Arrow kernel reproduces the split/md5/min pipeline of the
+    explode+groupBy reference exactly, including the degenerate short-text
+    branch, empty-token behaviour of split-on-space and null text."""
+    for df in _kernel_inputs(spark):
+        ref = {r["doc_id"]: r.asDict() for r in minhash_signatures(df).collect()}
         arrow = {
             r["doc_id"]: r.asDict()
             for r in minhash_signatures_arrow(df).collect()
         }
-        assert proj == arrow
+        assert ref == arrow
 
 
 def test_near_dup_filter_batch_semantics(spark):
@@ -134,10 +136,7 @@ def test_persisted_band_index_probe_is_exchange_free_on_index_side(spark, dirs):
     which IS the join key: the index-side subtree must contain NO Exchange
     (the stream side, tiny, is the only thing that moves) — the 100 TB
     probe shape."""
-    from biggraphite_spark.operators.dedup import (
-        band_keys,
-        minhash_signatures_projection,
-    )
+    from biggraphite_spark.operators.dedup import band_keys
     from biggraphite_spark.streaming.dedup import _bkey, write_band_index
 
     corpus = spark.createDataFrame(CORPUS, DOC_SCHEMA)
@@ -146,7 +145,7 @@ def test_persisted_band_index_probe_is_exchange_free_on_index_side(spark, dirs):
         write_band_index(corpus, os.path.join(dirs["out"], "idx"), table, n_buckets=4)
         index = spark.table(table)
         incoming = spark.createDataFrame(STREAM_ROWS, DOC_SCHEMA)
-        probe = _bkey(band_keys(minhash_signatures_projection(incoming))).join(
+        probe = _bkey(band_keys(minhash_signatures_arrow(incoming))).join(
             index.hint("merge"), "bkey"
         )
         prev = spark.conf.get("spark.sql.adaptive.enabled")
@@ -167,28 +166,16 @@ def test_persisted_band_index_probe_is_exchange_free_on_index_side(spark, dirs):
 
 
 def test_arrow_shingles_match_expression_form(spark):
-    from pyspark.sql import Row
-
-    from biggraphite_spark.operators.dedup import with_shingles
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).limit(60)
-    edge = spark.createDataFrame(
-        [
-            Row(doc_id=900001, text="one two"),
-            Row(doc_id=900002, text=""),
-            Row(doc_id=900003, text="a  b   c d a  b   c d"),  # dup grams
-            Row(doc_id=900004, text=" x y z "),
-        ]
-    )
-    for df in (docs.select("doc_id", "text"), edge):
-        expr = {
-            r["doc_id"]: list(r["shingles"])
-            for r in with_shingles(df, method="expr").collect()
+    """with_shingles (the Arrow pass) equals the shingles_col expression
+    element for element, order included."""
+    for df in _kernel_inputs(spark):
+        ref = {
+            r["doc_id"]: r["shingles"]
+            for r in df.select(
+                "doc_id", shingles_col(F.col("text")).alias("shingles")
+            ).collect()
         }
         arrow = {
-            r["doc_id"]: list(r["shingles"])
-            for r in with_shingles(df, method="arrow").collect()
+            r["doc_id"]: r["shingles"] for r in with_shingles(df).collect()
         }
-        assert expr == arrow  # arrays equal INCLUDING order
+        assert ref == arrow  # arrays equal INCLUDING order

@@ -666,6 +666,39 @@ def test_functions_index_and_version(graphite_server):
         assert r.status == 200 and r.read().decode().startswith("1.1")
 
 
+def test_unexpected_error_is_500_and_server_keeps_serving(
+    server, graphite_server, monkeypatch
+):
+    """An exception no route maps to a 4xx (say a failed Spark job) gets a
+    500 JSON reply instead of a dropped connection, on GET and POST, and
+    the same server answers the next request."""
+    from biggraphite_spark.web import CatalogWeb, GraphiteWeb
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("spark job failed")
+
+    monkeypatch.setattr(GraphiteWeb, "render", boom)
+    monkeypatch.setattr(CatalogWeb, "glob", boom)
+    for req in (
+        f"{graphite_server}/render?target=bg.click.u0",
+        urllib.request.Request(
+            f"{graphite_server}/render",
+            data=b"target=bg.click.u0",
+            headers={"Content-Type": "application/x-www-form-urlencoded"},
+            method="POST",
+        ),
+        f"{server}/biggraphite/glob?pattern=bg.*",
+    ):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            urllib.request.urlopen(req)
+        assert e.value.code == 500
+        assert json.loads(e.value.read()) == {
+            "message": "RuntimeError: spark job failed"
+        }
+    with urllib.request.urlopen(f"{graphite_server}/version") as r:
+        assert r.status == 200
+
+
 def test_render_dygraph_and_rickshaw_formats(graphite_server):
     base = (f"{graphite_server}/render?target=bg.click.u0&from=-2d&until=now"
             "&maxDataPoints=10")
